@@ -184,3 +184,17 @@ def test_range_join_equals_model(spark):
         vec, qdf.where("query_id < 0"), radius=1.0, id_col="vec_id"
     )
     assert empty.count() == 0 and "score" in empty.columns
+
+
+@pytest.mark.parametrize("metric", [Metric.L2, Metric.COSINE])
+def test_knn_join_ties_straddling_k_match_expr(spark, metric):
+    """One partition, nine duplicate vectors tied across the k-th place,
+    ids descending in row order: the GEMM path's per-partition top-k
+    must keep the lowest tied ids, exactly as the (distance, id) window
+    of ``knn_join_expr`` does."""
+    rows = [(10, [1.0, 0.0])] + [(i, [1.0, 1.0]) for i in range(9, 0, -1)]
+    vec = spark.createDataFrame(rows, "id long, embedding array<float>").coalesce(1)
+    q = spark.createDataFrame([(0, [1.0, 0.0])], "query_id long, embedding array<float>")
+    got = [r["id"] for r in knn_join(vec, q, k=3, metric=metric).orderBy("rank").collect()]
+    want = [r["id"] for r in knn_join_expr(vec, q, k=3, metric=metric).orderBy("rank").collect()]
+    assert got == want == [10, 1, 2]

@@ -462,6 +462,29 @@ def test_mjpeg_rejects_truncation_and_mixed_dims():
         decode_mjpeg(stream[:-3])
 
 
+@pytest.mark.parametrize(
+    "shape,subsampling",
+    [((13, 21), "4:4:4"), ((13, 21, 3), "4:4:4"), ((13, 21, 3), "4:2:0"), ((7, 9, 3), "4:2:0")],
+)
+def test_encode_mjpeg_batched_equals_per_frame(shape, subsampling):
+    """The batched path for same-shaped frames is byte-identical to
+    concatenating per-frame ``encode_jpeg`` output. Odd sizes exercise
+    edge padding, including 4:2:0's 16×16 chroma MCUs."""
+    from vectorsearch_spark.functions.jpeg import encode_jpeg, encode_mjpeg
+
+    rng = np.random.default_rng(11)
+    ramp = np.add.outer(np.arange(shape[0]) * 9, np.arange(shape[1]) * 5) % 256
+    if len(shape) == 3:
+        ramp = np.stack([ramp, ramp[::-1], ramp[:, ::-1]], axis=-1)
+    frames = [ramp.astype(np.uint8)] + [
+        rng.integers(0, 256, size=shape, dtype=np.uint8) for _ in range(3)
+    ]
+    table = rng.integers(1, 40, size=(8, 8))
+    for quant in (1, None, table):
+        want = b"".join(encode_jpeg(f, quant=quant, subsampling=subsampling) for f in frames)
+        assert encode_mjpeg(frames, quant=quant, subsampling=subsampling) == want
+
+
 def test_mjpeg_scan_ending_in_bare_ff_raises_truncated():
     """Scan data cut right after a 0xFF byte must raise the
     truncated-frame ValueError — the in-scan marker rewind used to

@@ -22,6 +22,24 @@ Plan per SURVEY §3.1, re-shaped for batch:
    then global merge → top-k by score with gid tie-break
    (fdb/FdbVectorIndex.java:432-437).
 
+``search`` (collected query batch) and ``search_join`` (DataFrame query
+side) differ only in how the query side reaches the scans; every job
+they both do is one function here, called with each caller's own
+frames and broadcast hints:
+
+- ``_plan_segments``: registry split into brute and sealed segments,
+  ``ef_by_seg`` and ``per_seg_limit``;
+- ``_embedding``: the normalize-on-read embedding column;
+- ``_unit_queries``: the cosine query unit-normalisation;
+- ``_pq_candidates``: the per-(segment, query) PQ LUT scan and top-ef,
+  run inside ``search``'s ``mapInPandas`` and ``search_join``'s cogroup;
+- ``_rerank_capped``: the exact re-rank and its per-segment cap window;
+- ``_merge_and_attach``: the global merge and payload attach.
+
+Every per-partition top-k goes through ``operators.topk.partial_topk``,
+so each partition emits its exact local top-k under the merge's
+(distance, id) order.
+
 Scale: the codes scan reads only (seg_id, vec_id, codes) — column
 pruning leaves the embeddings un-read until re-rank, which touches
 only Q×S×ef rows. Both scans emit bounded candidate sets per
@@ -30,12 +48,13 @@ partition, so no shuffle is ever O(N).
 
 from __future__ import annotations
 
+import functools
 import math
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from vectorsearch_spark.config import (
@@ -51,8 +70,12 @@ from vectorsearch_spark.functions.distances import (
 from vectorsearch_spark.index.catalog import SearchParams, VectorIndex
 from vectorsearch_spark.operators.knn import _partial_topk_mapper
 from vectorsearch_spark.operators.pq import approx_distances, build_lut
+from vectorsearch_spark.operators.topk import partial_topk
 
 _CAND_SCHEMA = "query_id long, seg_id int, vec_id int, approx double"
+_RESULT_SCHEMA = (
+    "query_id long, gid long, distance double, score double, payload binary, rank int"
+)
 
 
 def default_ef(k: int, oversample: int) -> int:
@@ -69,74 +92,199 @@ def tuned_ef(ef_base: int, k: int, n_codes: int) -> int:
     return max(k, min(n_codes, int(round(ef_base * scale))))
 
 
-def _pq_scan_fn(
-    codebooks, queries: list[tuple[int, list[float]]],
-    ef_by_seg: dict[int, int], metric: Metric = Metric.L2,
-    rotations=None,
-):
-    """``codebooks``: {seg_id: (m,k,sub) ndarray} dict, or a Spark
-    Broadcast of one — broadcast ships it once per executor instead of
-    once per task closure (memory bound O(#segments × m·k·sub_dim) on
-    the driver + one copy per executor)."""
+def _plan_segments(
+    index: VectorIndex, params: SearchParams, k: int
+) -> tuple[list[int], list[int], dict[int, int], int]:
+    """Registry split by state (F2 dispatch, WRITING excluded,
+    fdb/FdbVectorIndex.java:631-655) from the cached registry rows:
+    (brute segments, sealed segments, tuned ef per sealed segment,
+    per-segment cap). BRUTE scans every segment exhaustively."""
+    cfg = index.config
+    rows = index._segment_rows()
+    brute = [r["seg_id"] for r in rows if r["state"] in SEARCHABLE_BRUTE]
+    sealed = [r["seg_id"] for r in rows if r["state"] in SEARCHABLE_SEALED]
+    if params.mode == "BRUTE":
+        brute, sealed = brute + sealed, []
+    counts = {r["seg_id"]: r["count"] + r["deleted_count"] for r in rows}
+    ef_base = params.ef or default_ef(k, cfg.oversample)
+    ef_by_seg = {s: tuned_ef(ef_base, k, max(counts[s], 1)) for s in sealed}
+    per_seg_limit = params.per_seg_limit or max(k, k * cfg.oversample)
+    return brute, sealed, ef_by_seg, per_seg_limit
+
+
+def _allow_list(filter_gids: DataFrame | None) -> DataFrame | None:
+    if filter_gids is None:
+        return None
+    return filter_gids.select(F.col("gid").cast("long").alias("gid")).distinct()
+
+
+def _live_vectors(
+    index: VectorIndex, allowed: DataFrame | None, seg_ids: list[int] | None = None
+) -> DataFrame:
+    """Untombstoned vector rows (of ``seg_ids``, when given), pre-filtered
+    to the allow-list."""
+    live = ~F.col("deleted")
+    vec = index.vectors().filter(
+        live if seg_ids is None else F.col("seg_id").isin(seg_ids) & live
+    )
+    return vec if allowed is None else vec.join(allowed, "gid", "left_semi")
+
+
+def _embedding(params: SearchParams) -> Column:
+    """The stored embedding, unit-normalized under ``normalize_on_read``
+    (fdb/FdbVectorIndex.java:823-826)."""
+    emb = F.col("embedding")
+    return normalize(emb).cast("array<float>") if params.normalize_on_read else emb
+
+
+def _scan_codes(
+    index: VectorIndex, sealed_segs: list[int], allowed: DataFrame | None
+) -> DataFrame:
+    """Codes of the sealed segments. With an allow-list the scan is
+    pre-filtered, so the candidate pool is spent on allowed vectors
+    only."""
+    codes = index.codes(sealed_segs)
+    if allowed is None:
+        return codes
+    allowed_sv = (
+        index.vectors(states=SEARCHABLE_SEALED)
+        .join(allowed, "gid", "left_semi")
+        .select("seg_id", "vec_id")
+    )
+    return codes.join(allowed_sv, ["seg_id", "vec_id"], "left_semi")
+
+
+def _broadcast_codebooks(index: VectorIndex, sealed_segs: list[int]):
+    """(codebooks, OPQ rotations) of the sealed segments as Spark
+    broadcasts, from the driver codebook cache (SegmentCaches analog: no
+    Spark job when the sealed set is unchanged since the last search).
+    At 100k+ segments the dicts are O(#segments × m·k·sub_dim), so they
+    ship once per executor instead of serialized into every task."""
+    sc = index.spark.sparkContext
+    return (
+        sc.broadcast(index.codebooks_np(sealed_segs)),
+        sc.broadcast(index.rotations_np(sealed_segs)),
+    )
+
+
+def _unit_queries(vecs, metric: Metric) -> list[np.ndarray]:
+    """float64 query vectors. Under COSINE they are unit-normalized:
+    codebooks were trained/encoded on unit vectors (build.py), so the
+    L2² LUT ranking is then exactly monotone in cosine distance
+    (‖v̂−q̂‖² = 2−2·cos) — normalize-on-read analog,
+    fdb/FdbVectorIndex.java:1006-1013."""
+    qvecs = [np.asarray(v, dtype=np.float64) for v in vecs]
+    if metric == Metric.COSINE:
+        qvecs = [v / n if (n := np.linalg.norm(v)) > 0.0 else v for v in qvecs]
+    return qvecs
+
+
+def _cand_frame(parts: list[tuple]) -> pd.DataFrame:
+    """One ``_CAND_SCHEMA`` frame from per-(query, segment)
+    ``(query_id, seg_id, vec_ids, approx)`` parts; typed when empty."""
+    sizes = [len(p[2]) for p in parts]
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(np.asarray([p[0] for p in parts], dtype=np.int64), sizes),
+            "seg_id": np.repeat(np.asarray([p[1] for p in parts], dtype=np.int32), sizes),
+            "vec_id": np.concatenate([p[2] for p in parts] or [[]]).astype(np.int32),
+            "approx": np.concatenate([p[3] for p in parts] or [[]]).astype(np.float64),
+        }
+    )
+
+
+def _pq_candidates(
+    codes_pdf: pd.DataFrame,
+    qids,
+    qvecs: list[np.ndarray],
+    cb_map: dict,
+    rot_map: dict,
+    ef_by_seg: dict[int, int],
+    luts: dict,
+) -> pd.DataFrame:
+    """PQ LUT scan and top-ef per (segment, query) over one pandas batch
+    of (seg_id, vec_id, codes) rows: asymmetric L2² LUT distances
+    (fdb/FdbVectorIndex.java:1057-1079), then the exact top-ef by
+    (approx, vec_id). ``luts`` memoizes each (query position, segment)
+    LUT across the batches of one partition."""
+    parts = []
+    for seg_id, grp in codes_pdf.groupby("seg_id"):
+        seg_id = int(seg_id)
+        cb = cb_map.get(seg_id)
+        if cb is None:
+            continue
+        codes = np.frombuffer(
+            b"".join(grp["codes"].to_numpy()), dtype=np.uint8
+        ).reshape(len(grp), cb.shape[0])
+        vec_ids = grp["vec_id"].to_numpy(dtype=np.int64)
+        rot = rot_map.get(seg_id)
+        for i, (qid, qv) in enumerate(zip(qids, qvecs)):
+            lut = luts.get((i, seg_id))
+            if lut is None:
+                # OPQ: codes were encoded in rotated space, so the LUT
+                # is built from the rotated query
+                lut = luts[(i, seg_id)] = build_lut(cb, qv @ rot if rot is not None else qv)
+            d = approx_distances(codes, lut)
+            sel = partial_topk(d, vec_ids, ef_by_seg[seg_id])
+            parts.append((qid, seg_id, vec_ids[sel], d[sel]))
+    return _cand_frame(parts)
+
+
+def _pq_scan_fn(cbs_bc, rots_bc, queries: list[tuple[int, list[float]]], ef_by_seg, metric):
+    """``mapInPandas`` body of ``search``'s codes scan: the collected
+    query batch is closure-captured (one candidate set per query_id)."""
+    by_qid = dict(queries)
+
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cb_map = codebooks.value if hasattr(codebooks, "value") else codebooks
-        rot_map = (
-            rotations.value if hasattr(rotations, "value") else (rotations or {})
-        )
+        qids, qvecs = list(by_qid), _unit_queries(by_qid.values(), metric)
         luts: dict[tuple[int, int], np.ndarray] = {}
-        qvecs = {qid: np.asarray(v, dtype=np.float64) for qid, v in queries}
-        if metric == Metric.COSINE:
-            # codebooks were trained/encoded on unit vectors (build.py);
-            # normalizing the query makes the L2² LUT ranking exactly
-            # monotone in cosine distance (‖v̂−q̂‖² = 2−2·cos) —
-            # normalize-on-read analog, fdb/FdbVectorIndex.java:1006-1013
-            qvecs = {
-                qid: (v / n if (n := np.linalg.norm(v)) > 0.0 else v)
-                for qid, v in qvecs.items()
-            }
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = []
-            for seg_id, grp in pdf.groupby("seg_id"):
-                seg_id = int(seg_id)
-                cb = cb_map.get(seg_id)
-                if cb is None:
-                    continue
-                m = cb.shape[0]
-                codes = np.frombuffer(
-                    b"".join(grp["codes"].to_numpy()), dtype=np.uint8
-                ).reshape(len(grp), m)
-                vec_ids = grp["vec_id"].to_numpy(dtype=np.int64)
-                ef = ef_by_seg[seg_id]
-                kk = min(ef, len(vec_ids))
-                for qid, qv in qvecs.items():
-                    key = (qid, seg_id)
-                    if key not in luts:
-                        # OPQ: codes were encoded in rotated space, so
-                        # the LUT is built from the rotated query
-                        rot = rot_map.get(seg_id)
-                        luts[key] = build_lut(cb, qv @ rot if rot is not None else qv)
-                    d = approx_distances(codes, luts[key])
-                    head = (
-                        np.argpartition(d, kk - 1)[:kk] if kk < len(d) else np.arange(len(d))
-                    )
-                    order = np.lexsort((vec_ids[head], d[head]))
-                    sel = head[order]
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.full(kk, qid, dtype=np.int64),
-                                "seg_id": np.full(kk, seg_id, dtype=np.int32),
-                                "vec_id": vec_ids[sel].astype(np.int32),
-                                "approx": d[sel],
-                            }
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            if len(pdf):
+                yield _pq_candidates(
+                    pdf, qids, qvecs, cbs_bc.value, rots_bc.value, ef_by_seg, luts
+                )
 
     return scan
+
+
+def _rerank_capped(
+    index: VectorIndex,
+    cand: DataFrame,
+    q: DataFrame,
+    qvec: str,
+    params: SearchParams,
+    metric: Metric,
+    allowed: DataFrame | None,
+    per_seg_limit: int,
+) -> DataFrame:
+    """Exact re-rank (fdb/FdbVectorIndex.java:970-1046): join the
+    (query_id, seg_id, vec_id) candidates back to raw vectors, drop
+    tombstones, rescore against the ``qvec`` column of ``q`` with the
+    true metric, then keep the best ``per_seg_limit`` per (query,
+    segment) by (distance, gid). Callers choose the broadcast hints on
+    ``cand`` and ``q``."""
+    vec = index.vectors(states=SEARCHABLE_SEALED).select(
+        "seg_id", "vec_id", "gid", "embedding", "deleted"
+    )
+    reranked = (
+        vec.join(cand, ["seg_id", "vec_id"])
+        .filter(~F.col("deleted"))
+        .join(q, "query_id")
+        .withColumn("distance", distance_for_metric(_embedding(params), F.col(qvec), metric))
+        .select("query_id", "seg_id", "gid", "distance")
+    )
+    if allowed is not None:
+        # drops traversal-surfaced disallowed nodes (GRAPH/BEAM);
+        # a no-op for the pre-filtered PQ scan
+        reranked = reranked.join(allowed, "gid", "left_semi")
+    w_cap = Window.partitionBy("query_id", "seg_id").orderBy(
+        F.col("distance").asc(), F.col("gid").asc()
+    )
+    return (
+        reranked.withColumn("rn", F.row_number().over(w_cap))
+        .filter(F.col("rn") <= per_seg_limit)
+        .select("query_id", "gid", "distance")
+    )
 
 
 _BEAM_WARNED = False
@@ -162,13 +310,13 @@ def _warn_beam_once() -> None:
 def _graph_traverse_candidates(
     index: VectorIndex,
     sealed_segs: list[int],
-    qlist: list[tuple[int, list[float]]],
+    n_queries: int,
+    vec: DataFrame,
+    qdf: DataFrame,
+    ef_df: DataFrame,
     seeds: DataFrame,
-    ef_by_seg: dict[int, int],
     metric: Metric,
-    max_iters: int = 6,
-    min_hops: int = 0,
-    max_explore: int | None = None,
+    params: SearchParams,
 ) -> DataFrame:
     """G5/J3: iterative frontier–adjacency expansion over the sealed
     segments' neighbor graphs (the batch re-expression of BEST_FIRST,
@@ -190,20 +338,12 @@ def _graph_traverse_candidates(
     ``max_explore`` caps cumulative scored nodes at max_explore per
     (query, segment) on average (the batch analog of the per-traversal
     visited cap).
+
+    ``vec`` (seg_id, vec_id, embedding), the broadcast query frame
+    ``qdf`` and the broadcast per-segment ``ef_df`` are ``search``'s own.
     """
     spark = index.spark
     adj = index.adjacency(sealed_segs).select("seg_id", "vec_id", "neighbor_ids")
-    vec = index.vectors(states=SEARCHABLE_SEALED).select(
-        "seg_id", "vec_id", "embedding"
-    )
-    qdf = F.broadcast(
-        spark.createDataFrame(
-            [(qid, v) for qid, v in qlist], "query_id long, qvec array<float>"
-        )
-    )
-    ef_df = F.broadcast(
-        spark.createDataFrame(list(ef_by_seg.items()), "seg_id int, ef int")
-    )
     # Every iteration would otherwise auto-broadcast the adjacency and
     # vector join sides afresh; broadcasts pile up on the driver heap
     # across iterations. Disable auto-broadcast for the traversal —
@@ -220,11 +360,12 @@ def _graph_traverse_candidates(
     prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
+        max_explore = params.max_explore
         explore_budget = (
-            max_explore * len(qlist) * len(sealed_segs) if max_explore else None
+            max_explore * n_queries * len(sealed_segs) if max_explore else None
         )
         return _traverse_loop(
-            adj, vec, qdf, ef_df, seeds, qlist, metric, max_iters, explore_budget
+            adj, vec, qdf, ef_df, seeds, metric, params.max_iters, explore_budget
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
@@ -240,7 +381,7 @@ _CAPTURE_TRAVERSAL_PLANS = False
 _TRAVERSAL_PLANS: list[str] = []
 
 
-def _traverse_loop(adj, vec, qdf, ef_df, seeds, qlist, metric, max_iters, explore_budget=None):
+def _traverse_loop(adj, vec, qdf, ef_df, seeds, metric, max_iters, explore_budget=None):
     # visited/best state: (query_id, seg_id, vec_id, dist). Each round's
     # plan embeds the previous state MULTIPLE times (union + anti-join),
     # so without lineage truncation the logical plan grows exponentially
@@ -350,77 +491,39 @@ def search(
     pre-filter ANN trade.
     """
     params = params or SearchParams()
-    allowed = (
-        filter_gids.select(F.col("gid").cast("long").alias("gid")).distinct()
-        if filter_gids is not None
-        else None
-    )
+    allowed = _allow_list(filter_gids)
     if params.mode == "BEAM":
         _warn_beam_once()
     cfg = index.config
     spark = index.spark
     metric = Metric(cfg.metric)
     qrows = queries.select("query_id", "embedding").collect()
-    empty = spark.createDataFrame(
-        [], "query_id long, gid long, distance double, score double, payload binary, rank int"
-    )
     if not qrows:
-        return empty
+        return spark.createDataFrame([], _RESULT_SCHEMA)
     qlist = [(int(r[0]), list(r[1])) for r in qrows]
-    per_seg_limit = params.per_seg_limit or max(k, k * cfg.oversample)
-
-    seg_rows = index.segments().collect()
-    brute_segs = [r["seg_id"] for r in seg_rows if r["state"] in SEARCHABLE_BRUTE]
-    sealed_segs = [r["seg_id"] for r in seg_rows if r["state"] in SEARCHABLE_SEALED]
-    if params.mode == "BRUTE":
-        brute_segs = brute_segs + sealed_segs
-        sealed_segs = []
-    counts = {r["seg_id"]: r["count"] + r["deleted_count"] for r in seg_rows}
-
-    candidate_parts: list[DataFrame] = []
+    brute_segs, sealed_segs, ef_by_seg, per_seg_limit = _plan_segments(index, params, k)
+    parts: list[DataFrame] = []
 
     if brute_segs:
-        vec = index.vectors().filter(
-            F.col("seg_id").isin(brute_segs) & ~F.col("deleted")
+        pruned = _live_vectors(index, allowed, brute_segs).select(
+            F.col("gid").alias("id"), _embedding(params).alias("embedding")
         )
-        emb = F.col("embedding")
-        if params.normalize_on_read:
-            emb = normalize(emb).cast("array<float>")
-        if allowed is not None:
-            vec = vec.join(allowed, "gid", "left_semi")
-        pruned = vec.select(F.col("gid").alias("id"), emb.alias("embedding"))
         partial = pruned.mapInPandas(
             _partial_topk_mapper(qlist, per_seg_limit, metric, "id", "embedding"),
             schema="query_id long, id long, distance double",
         )
-        candidate_parts.append(partial.select("query_id", F.col("id").alias("gid"), "distance"))
+        parts.append(partial.select("query_id", F.col("id").alias("gid"), "distance"))
 
     if sealed_segs:
-        # driver codebook cache (SegmentCaches analog): no Spark job
-        # when the sealed set is unchanged since the last search
-        cbs = index.codebooks_np(sealed_segs)
-        # broadcast, not closure-capture: at 100k+ segments the codebook
-        # dict is O(#segments × m·k·sub_dim) — shipped once per executor
-        # as a broadcast instead of serialized into every task
-        cbs_bc = spark.sparkContext.broadcast(cbs)
-        rots_bc = spark.sparkContext.broadcast(index.rotations_np(sealed_segs))
-        ef_base = params.ef or default_ef(k, cfg.oversample)
-        ef_by_seg = {s: tuned_ef(ef_base, k, max(counts.get(s, 1), 1)) for s in sealed_segs}
-        # phase a: approx scan over codes only (embeddings not read here)
-        codes_src = index.codes(sealed_segs)
-        if allowed is not None and params.mode != "GRAPH":
-            # pre-filter the approx scan: the candidate pool is spent on
-            # allowed vectors only. GRAPH keeps its scan unfiltered —
-            # seeds may legitimately sit outside the filter (module doc)
-            allowed_sv = (
-                index.vectors(states=SEARCHABLE_SEALED)
-                .join(allowed, "gid", "left_semi")
-                .select("seg_id", "vec_id")
-            )
-            codes_src = codes_src.join(allowed_sv, ["seg_id", "vec_id"], "left_semi")
+        cbs_bc, rots_bc = _broadcast_codebooks(index, sealed_segs)
+        # phase a: approx scan over codes only (embeddings not read here).
+        # GRAPH keeps its scan unfiltered — seeds may legitimately sit
+        # outside the filter (module doc)
+        codes_src = _scan_codes(
+            index, sealed_segs, allowed if params.mode != "GRAPH" else None
+        )
         cand = codes_src.mapInPandas(
-            _pq_scan_fn(cbs_bc, qlist, ef_by_seg, metric, rotations=rots_bc),
-            _CAND_SCHEMA,
+            _pq_scan_fn(cbs_bc, rots_bc, qlist, ef_by_seg, metric), _CAND_SCHEMA
         )
         # merge per-partition partial top-ef into per-(query,segment) top-ef
         w_seg = Window.partitionBy("query_id", "seg_id").orderBy(
@@ -435,15 +538,7 @@ def search(
             .filter(F.col("rn") <= F.col("ef"))
             .drop("rn", "ef")
         )
-        # phase c: exact re-rank — fetch raw vectors for candidates only
-        vec = index.vectors(states=SEARCHABLE_SEALED).select(
-            "seg_id", "vec_id", "gid", "embedding", "deleted"
-        )
-        qdf = F.broadcast(
-            spark.createDataFrame(
-                [(qid, v) for qid, v in qlist], "query_id long, qvec array<float>"
-            )
-        )
+        qdf = F.broadcast(spark.createDataFrame(qlist, "query_id long, qvec array<float>"))
         if params.mode == "GRAPH":
             # G5 traversal: seeds → iterative frontier expansion over the
             # neighbor graph; the traversal's best list replaces the PQ
@@ -456,6 +551,9 @@ def search(
             #   hash-ordered vec_ids, shared across the query batch (the
             #   batch adaptation of per-query random pivots), scored
             #   exactly; no PQ information used for seeding.
+            vec = index.vectors(states=SEARCHABLE_SEALED).select(
+                "seg_id", "vec_id", "embedding"
+            )
             if params.seed_strategy == "RANDOM_PIVOTS":
                 w_piv = Window.partitionBy("seg_id").orderBy(
                     F.hash(F.col("vec_id"), F.lit(cfg.seed)).asc(), F.col("vec_id").asc()
@@ -504,78 +602,38 @@ def search(
                 )
             )
             cand = _graph_traverse_candidates(
-                index,
-                sealed_segs,
-                qlist,
-                seeds,
-                ef_by_seg,
-                metric,
-                max_iters=params.max_iters,
-                min_hops=params.min_hops,
-                max_explore=params.max_explore,
+                index, sealed_segs, len(qlist), vec, qdf, ef_df, seeds, metric, params
             ).select("query_id", "seg_id", "vec_id")
         elif params.mode == "BEAM":
             # deprecated beam expansion (WARN-once above) — served via
             # the in-task cogroup searcher; the collected query batch
             # just becomes its DataFrame query side
-            q_beam = spark.createDataFrame(
-                [(qid, v) for qid, v in qlist], "query_id long, __qvec array<float>"
-            )
+            q_beam = spark.createDataFrame(qlist, "query_id long, __qvec array<float>")
             cand = _graph_cogroup_candidates(
-                index,
-                q_beam,
-                sealed_segs,
-                ef_by_seg,
-                metric,
-                params.pivots,
-                mode="BEAM",
-                k=k,
-                beam=params.beam,
-                max_iters=params.max_iters,
-                min_hops=params.min_hops,
-                max_explore=params.max_explore,
-                refine_frontier=params.refine_frontier,
-            ).select("query_id", "seg_id", "vec_id")
-        emb = F.col("embedding")
-        if params.normalize_on_read:
-            emb = normalize(emb).cast("array<float>")
+                index, q_beam, sealed_segs, ef_by_seg, metric, params, k
+            )
         # candidate set is bounded (≤ Q×S×ef (seg_id, vec_id) triples) —
         # broadcast it so the re-rank is a probe of the vectors table,
         # not a shuffle of it
-        reranked = (
-            vec.join(F.broadcast(cand), ["seg_id", "vec_id"])
-            .filter(~F.col("deleted"))
-            .join(qdf, "query_id")
-            .withColumn("distance", distance_for_metric(emb, F.col("qvec"), metric))
-            .select("query_id", "seg_id", "gid", "distance")
+        parts.append(
+            _rerank_capped(
+                index, F.broadcast(cand), qdf, "qvec", params, metric, allowed, per_seg_limit
+            )
         )
-        if allowed is not None:
-            # drops traversal-surfaced disallowed nodes (GRAPH/BEAM);
-            # a no-op for the pre-filtered PQ path
-            reranked = reranked.join(allowed, "gid", "left_semi")
-        w_cap = Window.partitionBy("query_id", "seg_id").orderBy(
-            F.col("distance").asc(), F.col("gid").asc()
-        )
-        capped = (
-            reranked.withColumn("rn", F.row_number().over(w_cap))
-            .filter(F.col("rn") <= per_seg_limit)
-            .select("query_id", "gid", "distance")
-        )
-        candidate_parts.append(capped)
 
-    if not candidate_parts:
-        return empty
-
-    merged = candidate_parts[0]
-    for part in candidate_parts[1:]:
-        merged = merged.unionByName(part)
-    return _merge_and_attach(index, merged, k, metric)
+    return _merge_and_attach(index, parts, k, metric)
 
 
-def _merge_and_attach(index: VectorIndex, merged: DataFrame, k: int, metric: Metric) -> DataFrame:
+def _merge_and_attach(
+    index: VectorIndex, parts: list[DataFrame], k: int, metric: Metric
+) -> DataFrame:
     """T4 global merge + payload attach, shared by ``search`` (collected
-    query batch) and ``search_join`` (DataFrame query side): candidates
-    (query_id, gid, distance) → top-k with rank/score → payload."""
+    query batch) and ``search_join`` (DataFrame query side): the union of
+    the (query_id, gid, distance) candidate parts → top-k with
+    rank/score → payload."""
+    if not parts:
+        return index.spark.createDataFrame([], _RESULT_SCHEMA)
+    merged = functools.reduce(DataFrame.unionByName, parts)
     w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(), F.col("gid").asc())
     topk = (
         merged.withColumn("rank", F.row_number().over(w))
@@ -711,153 +769,65 @@ def search_join(
         )
     if params.mode == "BEAM":
         _warn_beam_once()
-    allowed = (
-        filter_gids.select(F.col("gid").cast("long").alias("gid")).distinct()
-        if filter_gids is not None
-        else None
-    )
+    allowed = _allow_list(filter_gids)
     metric = Metric(index.config.metric)
-    cfg = index.config
     q = queries.select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("embedding").alias("__qvec"),
     )
     if params.mode in ("AUTO", "BRUTE"):
-        vec = index.vectors().filter(~F.col("deleted"))
-        if allowed is not None:
-            vec = vec.join(allowed, "gid", "left_semi")
-        emb = F.col("embedding")
-        if params.normalize_on_read:
-            emb = normalize(emb).cast("array<float>")
-        scored = (
-            vec.select("gid", emb.alias("__vvec"))
-            .crossJoin(F.broadcast(q))
-            .select(
-                "query_id",
-                "gid",
-                distance_for_metric(F.col("__vvec"), F.col("__qvec"), metric).alias(
-                    "distance"
-                ),
-            )
-        )
-        partial = scored.mapInPandas(
-            _stream_topk_reducer(k), "query_id long, gid long, distance double"
-        )
-        return _merge_and_attach(index, partial, k, metric)
+        scored = _exhaustive_topk(_live_vectors(index, allowed), q, params, metric, k)
+        return _merge_and_attach(index, [scored], k, metric)
 
     # -- PQ mode: two-phase over sealed segments + exhaustive brute part
-    spark = index.spark
-    per_seg_limit = params.per_seg_limit or max(k, k * cfg.oversample)
-    seg_rows = index.segments().collect()  # O(#segments) registry read
-    brute_segs = [r["seg_id"] for r in seg_rows if r["state"] in SEARCHABLE_BRUTE]
-    sealed_segs = [r["seg_id"] for r in seg_rows if r["state"] in SEARCHABLE_SEALED]
-    counts = {r["seg_id"]: r["count"] + r["deleted_count"] for r in seg_rows}
+    brute_segs, sealed_segs, ef_by_seg, per_seg_limit = _plan_segments(index, params, k)
     parts: list[DataFrame] = []
-
     if brute_segs:
-        vec = index.vectors().filter(
-            F.col("seg_id").isin(brute_segs) & ~F.col("deleted")
-        )
-        if allowed is not None:
-            vec = vec.join(allowed, "gid", "left_semi")
-        emb = F.col("embedding")
-        if params.normalize_on_read:
-            emb = normalize(emb).cast("array<float>")
-        scored = (
-            vec.select("gid", emb.alias("__vvec"))
-            .crossJoin(F.broadcast(q))
-            .select(
-                "query_id",
-                "gid",
-                distance_for_metric(F.col("__vvec"), F.col("__qvec"), metric).alias(
-                    "distance"
-                ),
-            )
-        )
         parts.append(
-            scored.mapInPandas(
-                _stream_topk_reducer(per_seg_limit),
-                "query_id long, gid long, distance double",
+            _exhaustive_topk(
+                _live_vectors(index, allowed, brute_segs), q, params, metric, per_seg_limit
             )
         )
 
     if sealed_segs:
-        ef_base = params.ef or default_ef(k, cfg.oversample)
-        ef_by_seg = {
-            s: tuned_ef(ef_base, k, max(counts.get(s, 1), 1)) for s in sealed_segs
-        }
         if params.mode in ("GRAPH", "BEAM"):
             cand = _graph_cogroup_candidates(
-                index,
-                q,
-                sealed_segs,
-                ef_by_seg,
-                metric,
-                params.pivots,
-                mode=params.mode,
-                k=k,
-                beam=params.beam,
-                max_iters=params.max_iters,
-                min_hops=params.min_hops,
-                max_explore=params.max_explore,
-                refine_frontier=params.refine_frontier,
+                index, q, sealed_segs, ef_by_seg, metric, params, k
             )
         else:
-            allowed_sv = None
-            if allowed is not None:
-                allowed_sv = (
-                    index.vectors(states=SEARCHABLE_SEALED)
-                    .join(allowed, "gid", "left_semi")
-                    .select("seg_id", "vec_id")
-                )
-            cand = _pq_cogroup_candidates(
-                index, q, sealed_segs, ef_by_seg, metric, allowed_sv=allowed_sv
-            )
-        # exact re-rank: candidates are ≤ Q×S×ef (seg_id, vec_id)
-        # triples — join raw vectors on the composite key, then attach
-        # the query vector and rescore with the true metric. NO
-        # broadcast hint on the query join: at moderate Q AQE picks
-        # broadcast from the observed size anyway, and at the
+            cand = _pq_cogroup_candidates(index, q, sealed_segs, ef_by_seg, metric, allowed)
+        # exact re-rank of the ≤ Q×S×ef candidates. NO broadcast hint
+        # on the query join: at moderate Q AQE
+        # picks broadcast from the observed size anyway, and at the
         # million-query scale this mode exists for, a forced broadcast
         # of the query relation would be the memory wall — the shuffle
         # join on query_id is the correct fallback and both sides here
         # are already bounded (candidates ≤ Q×S×ef, queries = Q).
-        vec = index.vectors(states=SEARCHABLE_SEALED).select(
-            "seg_id", "vec_id", "gid", "embedding", "deleted"
-        )
-        emb = F.col("embedding")
-        if params.normalize_on_read:
-            emb = normalize(emb).cast("array<float>")
-        reranked = (
-            vec.join(cand, ["seg_id", "vec_id"])
-            .filter(~F.col("deleted"))
-            .join(q, "query_id")
-            .withColumn("distance", distance_for_metric(emb, F.col("__qvec"), metric))
-            .select("query_id", "seg_id", "gid", "distance")
-        )
-        if allowed is not None:
-            # drops traversal-surfaced disallowed nodes (GRAPH/BEAM);
-            # a no-op for the pre-filtered PQ cogroup path
-            reranked = reranked.join(allowed, "gid", "left_semi")
-        w_cap = Window.partitionBy("query_id", "seg_id").orderBy(
-            F.col("distance").asc(), F.col("gid").asc()
-        )
         parts.append(
-            reranked.withColumn("rn", F.row_number().over(w_cap))
-            .filter(F.col("rn") <= per_seg_limit)
-            .select("query_id", "gid", "distance")
+            _rerank_capped(index, cand, q, "__qvec", params, metric, allowed, per_seg_limit)
         )
 
-    if not parts:
-        return spark.createDataFrame(
-            [],
-            "query_id long, gid long, distance double, score double, "
-            "payload binary, rank int",
+    return _merge_and_attach(index, parts, k, metric)
+
+
+def _exhaustive_topk(
+    vec: DataFrame, q: DataFrame, params: SearchParams, metric: Metric, limit: int
+) -> DataFrame:
+    """``search_join``'s exhaustive scan: ``vec`` ⋈ BROADCAST(q), the
+    exact distance in codegen, then a per-partition streaming top-``limit``
+    (query_id, gid, distance) reduce."""
+    scored = (
+        vec.select("gid", _embedding(params).alias("__vvec"))
+        .crossJoin(F.broadcast(q))
+        .select(
+            "query_id",
+            "gid",
+            distance_for_metric(F.col("__vvec"), F.col("__qvec"), metric).alias("distance"),
         )
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    return _merge_and_attach(index, merged, k, metric)
+    )
+    return scored.mapInPandas(
+        _stream_topk_reducer(limit), "query_id long, gid long, distance double"
+    )
 
 
 def _graph_cogroup_candidates(
@@ -866,15 +836,8 @@ def _graph_cogroup_candidates(
     sealed_segs: list[int],
     ef_by_seg: dict[int, int],
     metric: Metric,
-    pivots: int,
-    n_buckets: int | None = None,
-    mode: str = "GRAPH",
-    k: int = 10,
-    beam: int | None = None,
-    max_iters: int = 6,
-    min_hops: int = 0,
-    max_explore: int | None = None,
-    refine_frontier: bool = True,
+    params: SearchParams,
+    k: int,
 ) -> DataFrame:
     """Distributed GRAPH (best-first) candidate generation with a
     DataFrame query side — the cogroup re-expression of BEST_FIRST
@@ -904,7 +867,7 @@ def _graph_cogroup_candidates(
     tombstoned-but-unvacuumed nodes are filtered at the exact re-rank
     (F1), exactly as in mode=PQ.
 
-    ``mode="BEAM"`` runs the reference's deprecated beam expansion
+    Mode ``BEAM`` runs the reference's deprecated beam expansion
     instead (fdb/FdbVectorIndex.java diskannExpand:841-903) with its
     exact loop semantics: per hop, score the UNVISITED neighbors of
     the whole frontier (additions capped so the expanded list never
@@ -916,37 +879,26 @@ def _graph_cogroup_candidates(
     (and caps at ef ≥ n) every node → degenerate-exact, the same
     hash-checkable-twin pattern as GRAPH.
     """
-    spark = index.spark
-    B = n_buckets or min(max(len(sealed_segs), 1), 256)
-    cbs_bc = spark.sparkContext.broadcast(index.codebooks_np(sealed_segs))
-    rots_bc = spark.sparkContext.broadcast(index.rotations_np(sealed_segs))
+    cbs_bc, rots_bc = _broadcast_codebooks(index, sealed_segs)
     seed = index.config.seed
+    mode, pivots, beam = params.mode, params.pivots, params.beam
+    max_iters, min_hops = params.max_iters, params.min_hops
+    max_explore, refine_frontier = params.max_explore, params.refine_frontier
 
     art = (
         index._artifacts()
         .filter(F.col("kind").isin("code", "adj") & F.col("seg_id").isin(sealed_segs))
         .select("seg_id", "kind", "vec_id", "codes", "neighbor_ids")
-        .withColumn("__b", F.pmod(F.hash("seg_id"), F.lit(B)))
     )
-    q_rep = q.withColumn("__b", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
 
     def fn(art_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
         import heapq
 
-        empty = pd.DataFrame(
-            {"query_id": [], "seg_id": [], "vec_id": [], "approx": []}
-        ).astype(
-            {"query_id": "int64", "seg_id": "int32", "vec_id": "int32", "approx": "float64"}
-        )
         if len(art_pdf) == 0 or len(q_pdf) == 0:
-            return empty
+            return _cand_frame([])
         cb_map = cbs_bc.value
         qids = q_pdf["query_id"].to_numpy(dtype=np.int64)
-        qvecs = [np.asarray(v, dtype=np.float64) for v in q_pdf["__qvec"]]
-        if metric == Metric.COSINE:
-            qvecs = [
-                (v / n if (n := np.linalg.norm(v)) > 0.0 else v) for v in qvecs
-            ]
+        qvecs = _unit_queries(q_pdf["__qvec"], metric)
         out = []
         for seg_id, grp in art_pdf.groupby("seg_id"):
             seg_id = int(seg_id)
@@ -1042,19 +994,7 @@ def _graph_cogroup_candidates(
                     take = sorted(
                         ((d, vec_ids[i]) for i, d in seen.items())
                     )[:ef]
-                    kk = len(take)
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": np.full(kk, qid, dtype=np.int64),
-                                "seg_id": np.full(kk, seg_id, dtype=np.int32),
-                                "vec_id": np.asarray(
-                                    [t[1] for t in take], dtype=np.int32
-                                ),
-                                "approx": np.asarray([t[0] for t in take]),
-                            }
-                        )
-                    )
+                    out.append((qid, seg_id, [t[1] for t in take], [t[0] for t in take]))
                     continue
                 # best list = max-heap of (-d, row); cand = min-heap
                 cand = [(dist[i], int(i)) for i in seeds]
@@ -1083,27 +1023,10 @@ def _graph_cogroup_candidates(
                             while len(best) > ef:
                                 heapq.heappop(best)
                 take = sorted(((-nd, vec_ids[i]) for nd, i in best))
-                kk = len(take)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(kk, qid, dtype=np.int64),
-                            "seg_id": np.full(kk, seg_id, dtype=np.int32),
-                            "vec_id": np.asarray([t[1] for t in take], dtype=np.int32),
-                            "approx": np.asarray([t[0] for t in take]),
-                        }
-                    )
-                )
-        if not out:
-            return empty
-        return pd.concat(out, ignore_index=True)
+                out.append((qid, seg_id, [t[1] for t in take], [t[0] for t in take]))
+        return _cand_frame(out)
 
-    return (
-        art.groupBy("__b")
-        .cogroup(q_rep.groupBy("__b"))
-        .applyInPandas(fn, _CAND_SCHEMA)
-        .select("query_id", "seg_id", "vec_id")
-    )
+    return _bucket_cogroup(art, q, len(sealed_segs), fn)
 
 
 def _pq_cogroup_candidates(
@@ -1112,95 +1035,47 @@ def _pq_cogroup_candidates(
     sealed_segs: list[int],
     ef_by_seg: dict[int, int],
     metric: Metric,
-    n_buckets: int | None = None,
-    allowed_sv: DataFrame | None = None,
+    allowed: DataFrame | None = None,
 ) -> DataFrame:
     """Distributed PQ candidate generation with a DataFrame query side:
     the replicated-join re-expression of ``search``'s closure-captured
-    codes scan (S3 + T1, fdb/FdbVectorIndex.java:1057-1079).
-
-    The codes table buckets by hash(seg_id) (a whole segment shares a
-    bucket so its LUT computes once per bucket); the query DF
-    replicates to every bucket via ``explode(sequence(0, B-1))`` — a
-    Q×B-row shuffle of the SMALL side, the classic replicated
-    (fragment-and-replicate) join — and the two sides meet in an
-    ``applyInPandas`` cogroup where NumPy builds per-(query, segment)
-    LUTs from the broadcast codebooks and emits top-ef candidates.
-    Nothing is collected to the driver; the big side (codes) shuffles
-    once on the bucket key.
-
-    Task memory is one bucket's codes (≈ N·m/B bytes) + Q query rows;
-    size ``n_buckets`` so a bucket's codes fit comfortably in executor
-    memory (default: one bucket per sealed segment, capped at 256)."""
-    spark = index.spark
-    B = n_buckets or min(max(len(sealed_segs), 1), 256)
-    cbs_bc = spark.sparkContext.broadcast(index.codebooks_np(sealed_segs))
-    rots_bc = spark.sparkContext.broadcast(index.rotations_np(sealed_segs))
-
-    codes = index.codes(sealed_segs)
-    if allowed_sv is not None:
-        # filtered ANN: the candidate pool is spent on allowed vectors
-        codes = codes.join(allowed_sv, ["seg_id", "vec_id"], "left_semi")
-    codes = codes.withColumn(
-        "__b", F.pmod(F.hash("seg_id"), F.lit(B))
-    )
-    q_rep = q.withColumn("__b", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
+    codes scan (S3 + T1, fdb/FdbVectorIndex.java:1057-1079) — the same
+    ``_pq_candidates`` kernel, fed by ``_bucket_cogroup``. Nothing is
+    collected to the driver; the big side (codes) shuffles once on the
+    bucket key."""
+    cbs_bc, rots_bc = _broadcast_codebooks(index, sealed_segs)
 
     def fn(codes_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(codes_pdf) == 0 or len(q_pdf) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "seg_id": [], "vec_id": [], "approx": []}
-            ).astype({"query_id": "int64", "seg_id": "int32", "vec_id": "int32", "approx": "float64"})
-        cb_map = cbs_bc.value
-        qids = q_pdf["query_id"].to_numpy(dtype=np.int64)
-        qvecs = [np.asarray(v, dtype=np.float64) for v in q_pdf["__qvec"]]
-        if metric == Metric.COSINE:
-            # unit-normalize queries so the L2² LUT ranking is exactly
-            # monotone in cosine distance (build normalizes stored
-            # vectors; see _pq_scan_fn)
-            qvecs = [
-                (v / n if (n := np.linalg.norm(v)) > 0.0 else v) for v in qvecs
-            ]
-        out = []
-        for seg_id, grp in codes_pdf.groupby("seg_id"):
-            seg_id = int(seg_id)
-            cb = cb_map.get(seg_id)
-            if cb is None:
-                continue
-            m = cb.shape[0]
-            mat = np.frombuffer(
-                b"".join(grp["codes"].to_numpy()), dtype=np.uint8
-            ).reshape(len(grp), m)
-            vec_ids = grp["vec_id"].to_numpy(dtype=np.int64)
-            ef = ef_by_seg[seg_id]
-            kk = min(ef, len(vec_ids))
-            seg_rot = rots_bc.value.get(seg_id)
-            for qid, qv in zip(qids, qvecs):
-                lut = build_lut(cb, qv @ seg_rot if seg_rot is not None else qv)
-                d = approx_distances(mat, lut)
-                head = (
-                    np.argpartition(d, kk - 1)[:kk] if kk < len(d) else np.arange(len(d))
-                )
-                order = np.lexsort((vec_ids[head], d[head]))
-                sel = head[order]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(kk, qid, dtype=np.int64),
-                            "seg_id": np.full(kk, seg_id, dtype=np.int32),
-                            "vec_id": vec_ids[sel].astype(np.int32),
-                            "approx": d[sel],
-                        }
-                    )
-                )
-        if not out:
-            return pd.DataFrame(
-                {"query_id": [], "seg_id": [], "vec_id": [], "approx": []}
-            ).astype({"query_id": "int64", "seg_id": "int32", "vec_id": "int32", "approx": "float64"})
-        return pd.concat(out, ignore_index=True)
+        return _pq_candidates(
+            codes_pdf,
+            q_pdf["query_id"].to_numpy(dtype=np.int64),
+            _unit_queries(q_pdf["__qvec"], metric),
+            cbs_bc.value,
+            rots_bc.value,
+            ef_by_seg,
+            {},
+        )
 
+    return _bucket_cogroup(
+        _scan_codes(index, sealed_segs, allowed), q, len(sealed_segs), fn
+    )
+
+
+def _bucket_cogroup(side: DataFrame, q: DataFrame, n_segs: int, fn) -> DataFrame:
+    """Fragment-and-replicate cogroup of a per-segment artifacts ``side``
+    with the query DataFrame ``q``. ``side`` buckets by hash(seg_id) — a
+    whole segment shares a bucket, so its LUTs compute once per bucket —
+    and ``q`` replicates to every bucket via ``explode(sequence(0,
+    B-1))``: a Q×B-row shuffle of the SMALL side. The two meet in an
+    ``applyInPandas`` cogroup running ``fn`` → ``_CAND_SCHEMA`` rows.
+
+    Task memory is one bucket's artifacts (≈ N·m/B bytes of codes) + Q
+    query rows, with one bucket per sealed segment, capped at 256."""
+    B = min(max(n_segs, 1), 256)
+    side = side.withColumn("__b", F.pmod(F.hash("seg_id"), F.lit(B)))
+    q_rep = q.withColumn("__b", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
     return (
-        codes.groupBy("__b")
+        side.groupBy("__b")
         .cogroup(q_rep.groupBy("__b"))
         .applyInPandas(fn, _CAND_SCHEMA)
         .select("query_id", "seg_id", "vec_id")

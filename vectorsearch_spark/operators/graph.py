@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from vectorsearch_spark.operators.topk import partial_topk
+
 
 def _pairwise_sq(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     d2 = (
@@ -41,6 +43,7 @@ def knn_graph(vectors: np.ndarray, degree: int, block: int = 2048) -> list[np.nd
     n = vectors.shape[0]
     x = vectors.astype(np.float64, copy=False)
     deg = min(degree, max(n - 1, 0))
+    pos = np.arange(n)
     out: list[np.ndarray] = []
     for start in range(0, n, block):
         stop = min(start + block, n)
@@ -48,12 +51,7 @@ def knn_graph(vectors: np.ndarray, degree: int, block: int = 2048) -> list[np.nd
         for i in range(start, stop):
             row = d2[i - start]
             row[i] = np.inf  # exclude self
-            if deg == 0:
-                out.append(np.empty(0, dtype=np.int32))
-                continue
-            head = np.argpartition(row, deg - 1)[:deg] if deg < n - 1 else np.argsort(row)[:deg]
-            order = np.lexsort((head, row[head]))
-            out.append(head[order].astype(np.int32))
+            out.append(partial_topk(row, pos, deg).astype(np.int32))
     return out
 
 

@@ -19,7 +19,11 @@ Scale story (the part that must survive 100 TB):
   exprs + window). It shuffles all Q×N scored pairs, so it is kept for
   small inputs and as a cross-check oracle of the GEMM path.
 
-Determinism: ties broken by (distance asc, id asc) everywhere.
+Determinism: ties broken by (distance asc, id asc) everywhere. The
+per-partition half of that rule is ``operators.topk.partial_topk``: it
+keeps every row tied at the k-th distance until the (distance, id)
+sort, so each partition emits its exact local top-k and the window
+merge is exact.
 """
 
 from __future__ import annotations
@@ -34,6 +38,7 @@ from pyspark.sql import functions as F
 from vectorsearch_spark.config import Metric
 from vectorsearch_spark.functions.distances import distance_for_metric, score_from_distance
 from vectorsearch_spark.functions.litarrays import lit_double_array
+from vectorsearch_spark.operators.topk import partial_topk
 
 _PAIR_SCHEMA = "query_id long, id long, distance double"
 
@@ -75,8 +80,8 @@ def _partial_topk_mapper(queries, k: int, metric: Metric, id_col: str, vec_col: 
             dist = _batch_distances(vmat, qmat, metric)  # (n, Q)
             n = len(ids)
             kk = min(k, n)
-            # per-query partial top-k: argpartition, then re-score the ≤k
-            # survivors with the direct formula in the oracle's operation
+            # per-query partial top-k (the shared kernel), then re-score
+            # the ≤k survivors with the direct formula in the oracle's operation
             # order — the GEMM expansion carries ~1e-8 cancellation error
             # (L2: exact matches would come out nonzero) and the batched
             # cosine divides by the two norms SEQUENTIALLY, which differs
@@ -86,7 +91,7 @@ def _partial_topk_mapper(queries, k: int, metric: Metric, id_col: str, vec_col: 
             out_q, out_i, out_d = [], [], []
             for j in range(len(qids)):
                 dj = dist[:, j]
-                head = np.argpartition(dj, kk - 1)[:kk] if kk < n else np.arange(n)
+                head = partial_topk(dj, ids, kk)
                 if metric == Metric.L2:
                     diff = vmat[head] - qmat[j]
                     dhead = np.sqrt(np.einsum("ij,ij->i", diff, diff))
@@ -101,7 +106,7 @@ def _partial_topk_mapper(queries, k: int, metric: Metric, id_col: str, vec_col: 
                     # sign-preserving engines and break byte-level
                     # comparisons (distance is mathematically ≥ 0).
                     dhead = np.maximum(1.0 - sim, 0.0)
-                order = np.lexsort((ids[head], dhead))
+                order = partial_topk(dhead, ids[head], kk)
                 out_q.append(np.full(kk, qids[j]))
                 out_i.append(ids[head[order]])
                 out_d.append(dhead[order])
